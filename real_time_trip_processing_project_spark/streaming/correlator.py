@@ -314,14 +314,22 @@ def _to_ts(col: pd.Series) -> pd.Series:
 
 _START_DATA_SET = frozenset(START_FIELDS[1:])
 
-# Every data field must be claimed by exactly one dtype family: the
-# columnar emission's else-branch astypes anything unclaimed to Float64,
-# so a NEW string wire field (e.g. store_and_fwd_flag) added without a
-# family would crash or silently corrupt at runtime.  Fail at import
-# instead (r18, ADVICE r17).
-assert frozenset(START_FIELDS[1:] + END_FIELDS) <= (
-    _TS_FIELDS | _INT_FIELDS | _DBL_FIELDS
-), "correlator wire field missing a dtype family (_TS/_INT/_DBL_FIELDS)"
+def _check_dtype_families(fields) -> None:
+    """Every data field must be claimed by a dtype family: the columnar
+    emission's else-branch astypes anything unclaimed to Float64, so a
+    NEW string wire field (e.g. store_and_fwd_flag) added without a
+    family would crash or silently corrupt at runtime.  Raises (rather
+    than asserts) so the guard also holds under ``python -O``."""
+    missing = sorted(set(fields) - (_TS_FIELDS | _INT_FIELDS | _DBL_FIELDS))
+    if missing:
+        raise TypeError(
+            f"correlator wire field(s) {missing} missing a dtype family "
+            "(_TS/_INT/_DBL_FIELDS)"
+        )
+
+
+# fail at import, not in the first micro-batch
+_check_dtype_families(START_FIELDS[1:] + END_FIELDS)
 
 
 def _merge_starts_ends(rows: pd.DataFrame) -> pd.DataFrame:

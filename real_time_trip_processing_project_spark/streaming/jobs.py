@@ -279,6 +279,8 @@ class PipelineQueries:
 #: waves land in micro-batches; parity test in test_streaming_grouped).
 DRAIN_MAX_FILES_PER_TRIGGER = 32
 
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
 
 def start_trip_pipeline(
     spark: SparkSession,
@@ -320,6 +322,15 @@ def start_trip_pipeline(
     idempotency, per-trip fold — identical, so the converged store is
     bit-for-bit the steady config's.  Mutually exclusive with an
     explicit ``max_files_per_trigger`` (the preset IS a trigger size).
+
+    A key-group query starts with ``min(session shuffle partitions,
+    key_groups, sparkContext.defaultParallelism)`` state partitions (see
+    :func:`_state_partitions`).  The query copies the session conf inside
+    ``start()``, so the session's own value is restored as soon as
+    ``start()`` returns; the per-trip path keeps it.  Spark fixes the
+    count at a query's first start and reads it back from the
+    checkpoint's offset metadata on restart, so an existing checkpoint
+    keeps its count and its state.
 
     ``state_store="rocksdb"`` switches the correlator's keyed state to
     the RocksDB provider (see :data:`ROCKSDB_PROVIDER`) — the 100 TB
@@ -401,13 +412,34 @@ def start_trip_pipeline(
         if qwriter is not None:
             qwriter = qwriter.trigger(processingTime=processing_time)
     qq = qwriter.start() if qwriter is not None else None
+    session_partitions = spark.conf.get(SHUFFLE_PARTITIONS)
+    if key_groups is not None:
+        spark.conf.set(
+            SHUFFLE_PARTITIONS, str(_state_partitions(spark, key_groups))
+        )
     try:
         q = writer.start()
     except Exception:
         if qq is not None:
             qq.stop()
         raise
+    finally:
+        spark.conf.set(SHUFFLE_PARTITIONS, session_partitions)
     return PipelineQueries(main=q, quarantine=qq)
+
+
+def _state_partitions(spark: SparkSession, key_groups: int) -> int:
+    """State partition count for a key-group query.  Every state
+    partition runs one Python task per micro-batch, with a fixed
+    start-up cost whether or not a group lands in it (SCALE.md "Python
+    tasks per micro-batch"); so no more partitions than groups, and no
+    more than one task per core, since tasks beyond the cores run as a
+    second wave."""
+    return min(
+        int(spark.conf.get(SHUFFLE_PARTITIONS)),
+        key_groups,
+        spark.sparkContext.defaultParallelism,
+    )
 
 
 def with_event_time(tagged: DataFrame, col_name: str = "event_ts") -> DataFrame:

@@ -41,18 +41,39 @@ def test_persisted_query_rep2_is_cold_after_clearcache(spark):
 
 def test_bench_time_loop_evicts_between_reps():
     """The clearCache call must live INSIDE the per-rep loop of both
-    bench timing loops (main + retest), not once per query."""
+    bench timing loops (main + retest), not once per query: every call
+    sits in the body of the same innermost ``for`` loop as a
+    ``perf_counter()`` call, and there are at least two."""
     import ast
     import pathlib
 
     src = (pathlib.Path(__file__).parent.parent / "bench.py").read_text()
     tree = ast.parse(src)
-    hits = 0
-    for node in ast.walk(tree):
-        if (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "clearCache"
-        ):
-            hits += 1
-    assert hits >= 2, "bench.py lost its between-reps cache eviction"
+
+    def calls(attr):
+        return [
+            n
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == attr
+        ]
+
+    # ast.walk is breadth-first, so an inner loop overwrites its outer one
+    innermost: dict[int, ast.For] = {}
+    for loop in ast.walk(tree):
+        if isinstance(loop, ast.For):
+            for stmt in loop.body:
+                for n in ast.walk(stmt):
+                    innermost[id(n)] = loop
+    timed_loops = {
+        id(innermost[id(c)]) for c in calls("perf_counter") if id(c) in innermost
+    }
+    clears = calls("clearCache")
+    assert len(clears) >= 2, "bench.py lost its between-reps cache eviction"
+    for c in clears:
+        loop = innermost.get(id(c))
+        assert loop is not None and id(loop) in timed_loops, (
+            f"bench.py:{c.lineno}: clearCache is not in the body of a timed "
+            "per-rep for loop"
+        )

@@ -113,10 +113,14 @@ def test_grouped_permutation_invariance(spark, tmp_path):
 
 def test_grouped_matches_per_trip_store(spark, tmp_path):
     """Same event tape through both hosts ⇒ identical current-trips view
-    (every column except the version stamp)."""
+    (every column except the version stamp).  The 4-group case runs its
+    state on 4 partitions of the 8-partition session (the state
+    partition rule of ``jobs.start_trip_pipeline``)."""
     n = 40
     stores = {}
-    for tag, groups in (("per-trip", None), ("grouped", GROUPS)):
+    for tag, groups in (
+        ("per-trip", None), ("grouped", GROUPS), ("grouped-4", 4)
+    ):
         base = tmp_path / tag
         base.mkdir()
         dirs = _dirs(base)
@@ -136,11 +140,128 @@ def test_grouped_matches_per_trip_store(spark, tmp_path):
         )
         stores[tag] = store
     a = sinks.current_trips(spark, stores["per-trip"])
-    b = sinks.current_trips(spark, stores["grouped"])
+    cols = [c for c in a.columns if c != "updated_at"]
+    for tag in ("grouped", "grouped-4"):
+        b = sinks.current_trips(spark, stores[tag])
+        assert a.select(cols).exceptAll(b.select(cols)).count() == 0, tag
+        assert b.select(cols).exceptAll(a.select(cols)).count() == 0, tag
+    assert a.count() == n
+
+
+def _reported_state_partitions(pq) -> set[int]:
+    """Every state partition count the main query's batches reported."""
+    return {
+        p["stateOperators"][0]["numShufflePartitions"]
+        for p in pq.main.recentProgress
+        if p["stateOperators"]
+    }
+
+
+def test_state_partitions_follow_groups_and_cores(spark, tmp_path):
+    """A key-group query runs its state on min(session partitions,
+    groups, cores) partitions and leaves the session's own value in
+    place; the per-trip query keeps the session's value."""
+    assert spark.conf.get(jobs.SHUFFLE_PARTITIONS) == "8"
+    assert spark.sparkContext.defaultParallelism >= 8
+    for tag, groups, want in (("grouped-4", 4, 4), ("per-trip", None, 8)):
+        base = tmp_path / tag
+        base.mkdir()
+        start_dir, end_dir, store, orphans, ckpt = _dirs(base)
+        producer.write_stream_files(
+            [_start_event(i) for i in range(6)], start_dir
+        )
+        producer.write_stream_files([_end_event(i) for i in range(6)], end_dir)
+        pq = jobs.start_trip_pipeline(
+            spark, start_dir, end_dir, store, orphans, ckpt,
+            key_groups=groups, available_now=True,
+        )
+        assert spark.conf.get(jobs.SHUFFLE_PARTITIONS) == "8", tag
+        pq.await_termination()
+        assert _reported_state_partitions(pq) == {want}, tag
+
+
+def test_restart_keeps_checkpoint_state_partitions(spark, tmp_path):
+    """A checkpoint keeps the state partition count it was created with:
+    a restart on a session whose rule picks another count still runs at
+    the checkpoint's count, and the trips that span the restart (start
+    before, end after, and the reverse) complete exactly as in one
+    uninterrupted drain."""
+    n = 30
+    # before the restart: trips 0-19 start, 0-9 end, 25-29 end early
+    first = (
+        [_start_event(i) for i in range(20)],
+        [_end_event(i) for i in (*range(10), *range(25, n))],
+    )
+    # after it: trips 20-29 start, 10-24 end
+    rest = (
+        [_start_event(i) for i in range(20, n)],
+        [_end_event(i) for i in range(10, 25)],
+    )
+
+    def drain(dirs, tape, prefix):
+        start_dir, end_dir, store, orphans, ckpt = dirs
+        producer.write_stream_files(tape[0], start_dir, prefix=prefix)
+        producer.write_stream_files(tape[1], end_dir, prefix=prefix)
+        pq = jobs.start_trip_pipeline(
+            spark, start_dir, end_dir, store, orphans, ckpt,
+            key_groups=GROUPS, available_now=True,
+        )
+        pq.await_termination()
+        return _reported_state_partitions(pq)
+
+    dirs = _dirs(tmp_path / "restarted")
+    session = spark.conf.get(jobs.SHUFFLE_PARTITIONS)
+    spark.conf.set(jobs.SHUFFLE_PARTITIONS, "2")
+    try:
+        assert drain(dirs, first, "before") == {2}
+    finally:
+        spark.conf.set(jobs.SHUFFLE_PARTITIONS, session)
+    # the rule now picks min(8, GROUPS, cores) = 8; the checkpoint says 2
+    assert jobs._state_partitions(spark, GROUPS) == 8
+    assert drain(dirs, rest, "after") == {2}
+
+    once = _dirs(tmp_path / "single")
+    drain(once, (first[0] + rest[0], first[1] + rest[1]), "all")
+
+    a = sinks.current_trips(spark, dirs[2])
+    b = sinks.current_trips(spark, once[2])
     cols = [c for c in a.columns if c != "updated_at"]
     assert a.select(cols).exceptAll(b.select(cols)).count() == 0
     assert b.select(cols).exceptAll(a.select(cols)).count() == 0
-    assert a.count() == n
+    completed = {
+        r["trip_id"]
+        for r in a.filter(F.col("status") == "Completed").collect()
+    }
+    assert completed == {f"t{i:04d}" for i in range(n)}
+
+
+def test_dtype_family_guard_raises_on_unclaimed_field():
+    """A wire field no dtype family claims fails loudly — by an explicit
+    raise, so the guard holds under ``python -O`` too."""
+    import pathlib
+    import subprocess
+    import sys
+
+    from real_time_trip_processing_project_spark.streaming import (
+        correlator as C,
+    )
+
+    fields = C.START_FIELDS[1:] + C.END_FIELDS
+    C._check_dtype_families(fields)
+    with pytest.raises(TypeError, match="store_and_fwd_flag"):
+        C._check_dtype_families(fields + ["store_and_fwd_flag"])
+    probe = (
+        "from real_time_trip_processing_project_spark.streaming import "
+        "correlator as C\n"
+        "try:\n"
+        "    C._check_dtype_families(['store_and_fwd_flag'])\n"
+        "except TypeError:\n"
+        "    raise SystemExit(0)\n"
+        "raise SystemExit(1)\n"
+    )
+    root = pathlib.Path(__file__).parent.parent
+    optimized = subprocess.run([sys.executable, "-O", "-c", probe], cwd=root)
+    assert optimized.returncode == 0
 
 
 def test_grouped_matches_per_trip_random_tapes(spark, tmp_path):
