@@ -60,17 +60,10 @@ _RECHECK_FIRST: list[tuple[str, int]] = [
 #: this, the steady state of 50-query cohorts in a 50-slot window has
 #: zero slack and a newly registered query would starve forever.
 _REGISTERED_ROUND = {
-    "multimodal_mp4_gop_index": 11,
-    "multimodal_mp4_cabac_index": 11,
-    "multimodal_mp4_cabac_gop_index": 11,
-    "multimodal_mp4_b_gop_index": 12,
-    "multimodal_mp4_p2_index": 12,
-    "multimodal_mp4_b_cabac_gop_index": 12,
     # r13: FULL-oracle bounded-error twins of the approximate tier
     # (r12 verdict item 2)
     "approx_sketch_bounds": 13,
     "sim_ann_recall_bounds": 13,
-    "multimodal_mp4_px_bounds": 13,
     "multimodal_mjpeg_px_bounds": 13,
     # r14: bounded-output siblings of the two semantics-quadratic
     # queries (r13 verdict item 4); funnel_conversion and
@@ -83,14 +76,12 @@ _REGISTERED_ROUND = {
 # projects it mechanically; verified against the live ordering).  r14
 # window = the overdue 44-query r10 cohort (which already contains the
 # schema-changed events_trend_slopes) + 1 pin (ts_cross_correlation)
-# + all 5 never-checked queue entries (multimodal_mp4_p2_index,
-# multimodal_mp4_b_cabac_gop_index, approx_sketch_bounds,
-# multimodal_mp4_px_bounds, multimodal_mjpeg_px_bounds) = 50.  r14 also
-# registered two bounded-output siblings (session_overlap_top_pairs,
+# + all 5 never-checked queue entries = 50.  r14 also registered two
+# bounded-output siblings (session_overlap_top_pairs,
 # graph_triangles_clustered; r13 verdict item 4) and RETIRED
-# funnel_conversion + text_lm_score in exchange (registry stays 199),
-# so r15 = the r11 cohort + the queue tail (sim_ann_recall_bounds +
-# the two r14 siblings).  Every never-checked query is therefore
+# funnel_conversion + text_lm_score in exchange, so r15 = the r11
+# cohort + the queue tail (sim_ann_recall_bounds + the two r14
+# siblings).  Every never-checked query is therefore
 # driver-checked by registration + 1..3 — ahead of the promotion bound
 # (registration-age promotion at > _MAX_STALENESS keeps the worst case
 # at registered + _MAX_STALENESS + 2 even for back-to-back 50-cohorts).

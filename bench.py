@@ -137,8 +137,6 @@ SECONDARY = [
     # round-10 additions
     "embedding_hard_negatives_ann",
     "curation_dsir_pipeline",
-    "multimodal_mp4_i16_stats",
-    "multimodal_mp4_intra_stats",
     "curation_span_corruption",
     "join_skew_salted",
     "multimodal_mjpeg_frames",
@@ -148,19 +146,6 @@ SECONDARY = [
     "multimodal_wav_mulaw",
     "variant_json_ops",
     "bitmap_distinct_count",
-    "multimodal_mp4_frames",
-    # round-11 additions: the deterministic halves of the lossy-codec
-    # tier under FULL oracles
-    "multimodal_mp4_i16_index",
-    "multimodal_mp4_intra_index",
-    "multimodal_mp4_gop_index",
-    "multimodal_mp4_cabac_index",
-    "multimodal_mp4_cabac_gop_index",
-    # round-12 additions: B-frame, multi-reference-P and CABAC-B GOP
-    # container indexes (FULL oracles, registered r12)
-    "multimodal_mp4_b_gop_index",
-    "multimodal_mp4_p2_index",
-    "multimodal_mp4_b_cabac_gop_index",
     # embedding_kmeans / embedding_kmeans_assign are oracle-gated per
     # round but, like tokenizer_apply_bpe_counts, kept out of the
     # timing list: the 3-iteration driver loop is ~90% fixed per-job
@@ -1048,245 +1033,6 @@ def _quality(spark) -> dict:
     )
     assert mae["mx"] <= 1.0, f"mjpeg per-pixel err {mae['mx']} > 1.0"
     q["mjpeg_mean_abs_px_err"] = round(float(mae["mae"]), 5)
-
-    # Intra_16x16+CAVLC video tier (r10): quantizer distortion floors —
-    # the codec chain is integer-deterministic, so these are stable
-    # bounds, not statistical ones (qp=12 measures mean 0.48 / max 4)
-    i16 = (
-        REGISTRY["multimodal_mp4_i16_stats"]
-        .fn(spark, SF_DIR)
-        .agg(
-            (F.sum("sum_abs_err") / F.sum("px_count")).alias("mean_err"),
-            F.max("max_abs_err").alias("max_err"),
-            F.avg("sample_bytes").alias("mean_sample_bytes"),
-            F.max("sample_bytes").alias("max_sample_bytes"),
-        )
-        .collect()[0]
-    )
-    assert i16["mean_err"] <= 1.0, f"i16 mean px err {i16['mean_err']}"
-    assert i16["max_err"] <= 8, f"i16 max px err {i16['max_err']}"
-    # rate gate: the per-MB I_PCM fallback bounds any 16x16-frame
-    # sample at ~398 B (length prefix + slice header + ue(25) + align
-    # + 384 raw bytes); a CAVLC rate regression would break this ceiling
-    assert i16["max_sample_bytes"] <= 400, (
-        f"i16 sample {i16['max_sample_bytes']} B exceeds the PCM bound"
-    )
-    q["mp4_i16_mean_abs_px_err"] = round(float(i16["mean_err"]), 5)
-    q["mp4_i16_max_abs_px_err"] = int(i16["max_err"])
-    q["mp4_i16_mean_sample_bytes"] = round(
-        float(i16["mean_sample_bytes"]), 1
-    )
-
-    # Full-intra tier (I4x4/I16/PCM mode decision): same floors, and
-    # the mode decision must never code WORSE than the PCM rate bound
-    intra = (
-        REGISTRY["multimodal_mp4_intra_stats"]
-        .fn(spark, SF_DIR)
-        .agg(
-            (F.sum("sum_abs_err") / F.sum("px_count")).alias("mean_err"),
-            F.max("max_abs_err").alias("max_err"),
-            F.avg("sample_bytes").alias("mean_sample_bytes"),
-            F.max("sample_bytes").alias("max_sample_bytes"),
-        )
-        .collect()[0]
-    )
-    assert intra["mean_err"] <= 1.0, f"intra mean err {intra['mean_err']}"
-    assert intra["max_err"] <= 8, f"intra max err {intra['max_err']}"
-    assert intra["max_sample_bytes"] <= 400
-    q["mp4_intra_mean_abs_px_err"] = round(float(intra["mean_err"]), 5)
-    q["mp4_intra_mean_sample_bytes"] = round(
-        float(intra["mean_sample_bytes"]), 1
-    )
-
-    # CABAC tier (r11): the arithmetic coder serializes the SAME i16
-    # analysis, so on any doc slice its distortion stats must EQUAL the
-    # CAVLC run's exactly (cross-entropy-coder conformance with no
-    # external decoder); the rate ratio is recorded and ceilinged —
-    # single-MB 16x16 samples pay the per-slice flush, so the bound is
-    # a guard against catastrophic regression, not a win claim.
-    from real_time_trip_processing_project_spark.operators import (
-        multimodal as _MM,
-    )
-    from real_time_trip_processing_project_spark.sources.readers import (
-        load_fixture as _lf,
-    )
-
-    cab_docs = _lf(spark, SF_DIR, "documents").filter(
-        F.col("text").rlike(r"^[\x00-\x7F]*$") & (F.col("doc_id") % 16 == 0)
-    )
-    pair = {}
-    for codec in ("i16", "i16_cabac"):
-        pair[codec] = (
-            _MM.mp4_i16_frame_stats(cab_docs, codec=codec)
-            .agg(
-                F.sum("sum_abs_err").alias("err"),
-                F.max("max_abs_err").alias("mx"),
-                F.sum("sample_bytes").alias("rate"),
-                F.count("*").alias("n"),
-            )
-            .collect()[0]
-        )
-    assert pair["i16"]["n"] == pair["i16_cabac"]["n"]
-    assert pair["i16"]["err"] == pair["i16_cabac"]["err"], (
-        "CABAC distortion diverged from CAVLC — shared analysis broken"
-    )
-    assert pair["i16"]["mx"] == pair["i16_cabac"]["mx"]
-    cab_ratio = pair["i16_cabac"]["rate"] / max(pair["i16"]["rate"], 1)
-    assert cab_ratio <= 1.25, f"CABAC/CAVLC rate ratio {cab_ratio}"
-    q["mp4_cabac_rate_vs_cavlc"] = round(float(cab_ratio), 4)
-
-    # Inter tier (r11): on a deterministic moving sequence (a rolled
-    # 64x64 base frame — doc frames are unrelated text chunks, where
-    # temporal prediction rightly buys nothing), the P-GOP container
-    # must beat all-intra decisively AND decode back within the same
-    # distortion bound.  Driver-side pure-Python: one tiny encode pair.
-    import numpy as _np
-
-    from real_time_trip_processing_project_spark.operators import (
-        h264 as _H,
-    )
-
-    _base = _np.add.outer(
-        _np.arange(64, dtype=_np.int64) * 5,
-        _np.arange(64, dtype=_np.int64) * 3,
-    ) % 251
-    _gop_frames = _np.stack(
-        [
-            _np.roll(_np.roll(_base, 2 * k, 0), 4 * k, 1).astype(_np.uint8)
-            for k in range(8)
-        ]
-    )
-    _gop = _H.encode_mp4_h264(_gop_frames, codec="i16p", qp=12)
-    _alli = _H.encode_mp4_h264(_gop_frames, codec="i16", qp=12)
-    gop_ratio = len(_gop) / len(_alli)
-    assert gop_ratio <= 0.7, f"GOP/all-I rate ratio {gop_ratio}"
-    _, _dec = _H.decode_mp4_h264(_gop)
-    assert len(_dec) == 8
-    _gop_err = max(
-        int(_np.abs(f.astype(_np.int64) - _gop_frames[i].astype(_np.int64)).max())
-        for i, f in _dec
-    )
-    assert _gop_err <= 8, f"GOP decode max px err {_gop_err}"
-    q["mp4_gop_rate_vs_alli"] = round(gop_ratio, 4)
-    q["mp4_gop_max_abs_px_err"] = _gop_err
-
-    # B tier (r12, h264_b.py): two gates on the same driver-side
-    # deterministic content.
-    # (a) The B GOP (IDR P B P B … + ctts reordering) must beat
-    #     all-intra as decisively as the P GOP on the moving sequence
-    #     and decode back IN DISPLAY ORDER within the same distortion
-    #     bound.  (B vs P GOP rate is near-parity by design here:
-    #     B_Skip/B_Direct are documented seams, so the ladder trades
-    #     the skip savings for reorder coverage — the honest win claim
-    #     is gate (b).)
-    _bgop = _H.encode_mp4_h264(_gop_frames, codec="i16pb", qp=12)
-    bgop_ratio = len(_bgop) / len(_alli)
-    assert bgop_ratio <= 0.7, f"B-GOP/all-I rate ratio {bgop_ratio}"
-    _, _bdec = _H.decode_mp4_h264(_bgop)
-    assert [i for i, _f in _bdec] == list(range(8)), (
-        "B GOP did not decode back in display order"
-    )
-    _bgop_err = max(
-        int(_np.abs(f.astype(_np.int64) - _gop_frames[i].astype(_np.int64)).max())
-        for i, f in _bdec
-    )
-    assert _bgop_err <= 8, f"B GOP decode max px err {_bgop_err}"
-    q["mp4_b_gop_rate_vs_alli"] = round(bgop_ratio, 4)
-    q["mp4_b_gop_max_abs_px_err"] = _bgop_err
-    # (b) the statistical point of bi-prediction: averaging two noisy
-    #     references halves reference-noise variance, so the SAME frame
-    #     coded as B (past+future refs) must be smaller than coded as P
-    #     (past ref only) — fixed-seed noisy-static triple, the
-    #     measured ratio ≈0.97 (five dev seeds 0.972–0.986)
-    from real_time_trip_processing_project_spark.operators import (
-        h264_b as _HB,
-        h264_inter as _HP,
-        h264_intra as _HI,
-    )
-
-    _rng = _np.random.default_rng(7)
-    _yy, _xx = _np.mgrid[0:48, 0:64]
-    _clean = (_np.sin(_yy / 6.0) + _np.cos(_xx / 7.0)) * 60 + 128
-    _f0, _f1, _f2 = (
-        _np.clip(_clean + _rng.normal(0, 6, _clean.shape), 0, 255).astype(
-            _np.uint8
-        )
-        for _ in range(3)
-    )
-    _n0, _r0y, _r0c = _HI.encode_idr_frame_i16(
-        _f0, qp=12, return_recon=True, return_chroma=True
-    )
-    _np2, _r2y, _r2c = _HP.encode_p_frame(_f2, _r0y, _r0c, qp=12)[:3]
-    _nal_p, _, _ = _HP.encode_p_frame(_f1, _r0y, _r0c, qp=12)
-    _nal_b, _, _ = _HB.encode_b_frame(_f1, _r0y, _r0c, _r2y, _r2c, qp=12)
-    b_vs_p = len(_nal_b) / len(_nal_p)
-    assert b_vs_p < 1.0, f"bi-prediction lost to P on noisy refs: {b_vs_p}"
-    q["mp4_b_vs_p_same_frame_rate"] = round(b_vs_p, 4)
-    # B_Skip collapse (r12, spatial direct 8.4.1.2.2): a B frame
-    # between two reconstructions of the SAME source must code as
-    # (near-)pure skip runs — measures 84 B for 12 MBs (was 726 B
-    # before skip/direct shipped); gate well above the measurement
-    _nps, _rsy, _rsc, _pmv = _HP.encode_p_frame(
-        _f0, _r0y, _r0c, qp=12, return_mvs=True
-    )
-    _nskip, _, _ = _HB.encode_b_frame(
-        _f0, _r0y, _r0c, _rsy, _rsc, qp=12, col_mvs=_pmv
-    )
-    assert len(_nskip) < 160, (
-        f"B_Skip failed to collapse static content: {len(_nskip)} B"
-    )
-    q["mp4_b_skip_static_bytes"] = len(_nskip)
-    # Explicit weighted bi-prediction (r12): a flash B frame (1.3x the
-    # brightness of both references) must code at a fraction of the
-    # default-bipred rate once estimate_weights corrects the
-    # references.  On THIS content (bright sinusoid + noise, partial
-    # clipping pulls the LS fit to scale+offset (73, 15)) it measures
-    # 0.558; the unclipped test fixture measures 0.42 — gate 0.7.
-    _flash = _np.clip(_f0.astype(_np.float64) * 1.3, 0, 255).astype(
-        _np.uint8
-    )
-    _wts = _HB.estimate_weights(_flash, _r0y, _rsy)
-    _plain_b, _, _ = _HB.encode_b_frame(
-        _flash, _r0y, _r0c, _rsy, _rsc, qp=12, col_mvs=_pmv
-    )
-    _wgt_b, _, _ = _HB.encode_b_frame(
-        _flash, _r0y, _r0c, _rsy, _rsc, qp=12, col_mvs=_pmv,
-        weights=_wts,
-    )
-    w_ratio = len(_wgt_b) / len(_plain_b)
-    assert w_ratio < 0.7, f"weighted B lost its flash win: {w_ratio}"
-    q["mp4_b_weighted_flash_rate"] = round(w_ratio, 4)
-    # CABAC B twin (r12): shared analysis ⇒ the arithmetic B GOP must
-    # decode to pixels IDENTICAL to the CAVLC B GOP, at a rate ratio
-    # bounded like the intra CABAC gate
-    _bgop_c = _H.encode_mp4_h264(_gop_frames, codec="i16pb_cabac", qp=12)
-    _, _bdec_c = _H.decode_mp4_h264(_bgop_c)
-    assert [i for i, _f in _bdec_c] == [i for i, _f in _bdec]
-    for (_i1, _fa2), (_i2, _fb2) in zip(_bdec_c, _bdec):
-        assert _np.array_equal(_fa2, _fb2), (
-            "CABAC B GOP pixels diverged from CAVLC B GOP"
-        )
-    bcab_ratio = len(_bgop_c) / len(_bgop)
-    assert bcab_ratio <= 1.25, f"CABAC/CAVLC B GOP rate ratio {bcab_ratio}"
-    q["mp4_b_cabac_rate_vs_cavlc"] = round(bcab_ratio, 4)
-    # (c) multi-reference P (r12, extra_refs): on flash content where
-    #     frame k matches frame k-2 (never k-1), the 2-deep te(v)
-    #     ref_idx list must buy what no single reference can — gate at
-    #     0.6x the 1-ref rate (measures ≈0.3: the matched scene codes
-    #     as near-skip on refIdx 1)
-    _fa = (_clean + 40 * _np.sin(_xx / 3.0)).clip(0, 255).astype(_np.uint8)
-    _fb = _np.roll(_fa, 24, axis=1)
-    _na, _ray, _rac = _HI.encode_idr_frame_i16(
-        _fa, qp=12, return_recon=True, return_chroma=True
-    )
-    _nb, _rby, _rbc = _HP.encode_p_frame(_fb, _ray, _rac, qp=12)
-    _one, _, _ = _HP.encode_p_frame(_fa, _rby, _rbc, qp=12)
-    _two, _, _ = _HP.encode_p_frame(
-        _fa, _rby, _rbc, qp=12, extra_refs=[(_ray, _rac)]
-    )
-    p2_vs_p1 = len(_two) / len(_one)
-    assert p2_vs_p1 < 0.6, f"2-ref P lost its flash-content win: {p2_vs_p1}"
-    q["mp4_p2_vs_p1_flash_rate"] = round(p2_vs_p1, 4)
 
     # Datasketches HLL mergeable-sketch floor: the merged-union estimate
     # (the "ALL" row of the registered query) vs the exact global

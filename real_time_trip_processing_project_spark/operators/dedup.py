@@ -318,10 +318,15 @@ def _prefix_candidates(
     # at 4× (139 s → 33 s sf10); this applies it to the remaining three
     # string exchanges.
     #
-    # EXACTNESS IS UNCONDITIONAL, in two parts:
+    # Exactness, in two parts, up to one hash-collision case:
     # - JOIN keys: hashing an equi-join key can only merge key groups —
     #   a SUPERSET of the string-keyed candidates, all exact-Jaccard
-    #   verified against the full shingle sets afterwards.
+    #   verified against the full shingle sets afterwards.  The one
+    #   loss: prefixes are built over the HASHES, so if two distinct
+    #   shingles in a qualifying pair's prefix overlap collide in
+    #   xxhash64, the pair's docs count them as one token and the pair
+    #   can drop out of the candidates.  Over n distinct shingles the
+    #   chance of any collision is about n²/2⁶⁴ (~5e-8 at n = 10⁶).
     # - PREFIX ORDERING: tokens are ordered by the global preorder
     #   (df(hsh), hsh) and positioned with ``rank()`` (not row_number).
     #   The prefix lemma holds for ANY global token preorder — df is a

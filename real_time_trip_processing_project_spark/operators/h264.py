@@ -1,12 +1,10 @@
 """H.264/AVC elementary stream + MP4 (ISO BMFF) container, pure numpy.
 
-Closes the repo's last marked codec seam (multimodal.py's
-``NotImplementedError`` for MP4/H.264): a spec-conformant **I_PCM
-baseline** encoder/decoder pair plus a real MP4 container with full
-sample tables.  The reference pipeline has no media at all
-(README.md:3-10); this is north-star tier for multimodal training-data
-pipelines, mirroring the WAV/BMP/PNG/AVI/MJPEG family in
-``operators/multimodal.py``.
+A standalone library: a spec-conformant **I_PCM baseline**
+encoder/decoder pair plus a real MP4 container with full sample
+tables.  No query or job imports it; ``multimodal.py``'s
+``_real_decode`` sends MP4 payloads to its ``NotImplementedError``
+seam.  The reference pipeline has no media at all (README.md:3-10).
 
 Scope, stated precisely:
 
@@ -16,9 +14,8 @@ Scope, stated precisely:
   slice headers, and macroblock_layer with ``mb_type = I_PCM`` —
   byte-aligned raw 4:2:0 samples per the spec's pcm path.  I_PCM is
   the profile's lossless mode (every decoder must support it), which
-  makes THIS video path bit-exact end-to-end — so unlike the MJPEG
-  float-DCT path, the decoded-pixel queries carry a FULL DuckDB
-  oracle.
+  makes THIS video path bit-exact end-to-end, unlike the MJPEG
+  float-DCT path.
 - **Container**: ftyp / mdat / moov with the complete sample-table
   chain (stsd→avc1→avcC decoder config holding SPS+PPS, stts, stsc,
   stsz, stco), length-prefixed NAL samples (lengthSizeMinusOne = 3).
@@ -34,50 +31,25 @@ Scope, stated precisely:
   quantization, the full CAVLC table set, and a per-MB
   I4x4/I16/I_PCM min-bits mode decision; :func:`decode_mp4_h264`
   dispatches per macroblock, so mixed slices decode.
-- **CABAC** (r11): ``h264_cabac.py`` adds the arithmetic entropy
-  coder — full baseline intra (Intra_16x16 + Intra_4x4 with exact-bit
-  per-MB mode decision) AND P slices — over the same analysis; the
-  PPS entropy_coding_mode_flag selects the slice decoder.
 - **Inter prediction** (r11): ``h264_inter.py`` adds P slices
   (P_L0_16x16 + P_Skip, median MV prediction, QUARTER-sample motion
   compensation — the 6-tap half-sample filter and eighth-sample
   bilinear chroma of 8.4.2.2) and GOP containers with a real stss
-  sync table (codec="i16p" / "i16p_cabac").
-- **B frames** (r12): ``h264_b.py`` adds bi-predictive B slices
-  (B_L0/B_L1/B_Bi_16x16, refIdx-aware per-list median MV prediction
-  per 8.4.1.3, the default bi-prediction average of 8.4.2.3), a
-  2-picture sliding-window DPB, pic_order_cnt_type 0 slice headers
-  (poc_lsb — decode order ≠ display order needs explicit POC), and
-  ``codec="i16pb"`` GOP containers carrying a real ``ctts``
-  composition-offset box that :func:`decode_mp4_h264` uses to emit
-  frames back in DISPLAY order.
+  sync table (codec="i16p").
 - **Multi-reference P** (r12): ``h264_inter.encode_p_frame``'s
   ``extra_refs`` codes a 2-deep list 0 — slice-header
   num_ref_idx_l0_active override, per-MB te(v) ref_idx_l0, the full
   refIdx-aware 8.4.1.3.1 MV prediction and 8.4.1.1 P_Skip forms —
   ``codec="i16p2"`` GOPs keep the sliding 2-picture DPB.
-- **CABAC B slices** (r12): ``h264_cabac.encode_b_frame_cabac`` — the
-  Table 9-37 B mb_type bins, per-list UEG3 mvd with per-list
-  |mvd|-sum contexts, B-slice mb_skip_flag contexts — over h264_b's
-  analysis (``codec="i16pb_cabac"``), decoding pixel-identical to the
-  CAVLC B GOP.
-- **B_Skip / B_Direct_16x16** (r12): spatial direct derivation per
-  8.4.1.2.2 (MinPositive refIdx, directZeroPrediction, colZeroFlag
-  from the colocated P motion field carried through the GOP DPB), in
-  BOTH entropy coders — static B content collapses to skip runs /
-  skip flags; temporal direct (8.4.1.2.3, ``b_direct="temporal"``)
-  ships as the alternative derivation with decoder dispatch on the
-  parsed flag; explicit weighted bi-prediction (8.4.2.3.2,
-  ``b_weighted=True`` → weighted_bipred_idc-2 PPS +
-  pred_weight_table + least-squares weight estimation) corrects
-  flash/fade brightness.  The remaining seams, each explicitly
-  ValueError-gated: >2 active references, ref_pic_list_modification,
-  implicit weighted bi-prediction, chroma weights, sub-16x16 B
-  partitions, and CABAC I_PCM.
+- **Out of scope**, each ValueError-gated in the decoder: CABAC
+  (entropy_coding_mode_flag = 1), B slices, pic_order_cnt_type 0 and
+  1, >2 active references, ref_pic_list_modification and weighted
+  prediction.  The CABAC and B-slice tiers were deleted with the MP4
+  queries that used them; nothing in the trip or training-data
+  pipelines calls this codec.
 
-At 100 TB: encode/decode are row-local Arrow-batched work inside
-``mapInPandas`` (multimodal.py wires them), scaling with scan
-bandwidth; nothing here shuffles.
+At 100 TB: encode/decode are row-local work that would run inside
+``mapInPandas``, scaling with scan bandwidth; nothing here shuffles.
 """
 
 from __future__ import annotations
@@ -87,10 +59,6 @@ import struct
 import numpy as np
 
 MB = 16  # H.264 macroblock edge (luma samples)
-
-#: pic_order_cnt_lsb width for poc_type-0 streams (the B tier):
-#: log2_max_pic_order_cnt_lsb = 16 → poc_lsb = 2·display_idx mod 65536.
-POC_LSB_BITS = 16
 
 # ---------------------------------------------------------------------------
 # Bit I/O + Exp-Golomb
@@ -234,34 +202,22 @@ def ebsp_to_rbsp(ebsp: bytes) -> bytes:
 # SPS / PPS
 
 
-def encode_sps(
-    width: int, height: int, max_ref: int = 0, poc_type: int = 2
-) -> bytes:
+def encode_sps(width: int, height: int, max_ref: int = 0) -> bytes:
     """Baseline SPS for frame_mbs_only 4:2:0 video, dimensions in whole
     macroblocks (the encoder keeps frames multiple-of-16 like the MJPEG
     path, so no frame cropping).  Returns the NAL (header byte 0x67 +
-    EBSP payload).
-
-    ``poc_type``: 2 (output order = decode order — every all-IDR tier
-    and the P-GOP tier) or 0 (explicit pic_order_cnt_lsb in each slice
-    header — REQUIRED by spec 7.4.2.1 the moment decode order differs
-    from display order, i.e. the B-frame tier, h264_b.py).  Type 0
-    fixes log2_max_pic_order_cnt_lsb at 16 bits: poc_lsb = 2·display
-    index mod 65536, the conventional even-numbered frame POC."""
+    EBSP payload).  pic_order_cnt_type is 2: output order = decode
+    order, which holds for every all-IDR tier and the P-GOP tier."""
     if width % MB or height % MB:
         raise ValueError("frame dimensions must be multiples of 16")
-    if poc_type not in (0, 2):
-        raise ValueError("only poc_type 0 and 2 are emitted")
     w = BitWriter()
     w.u(66, 8)  # profile_idc: Baseline
     w.u(0, 8)  # constraint_set*_flags + reserved
     w.u(30, 8)  # level_idc 3.0
     w.ue(0)  # seq_parameter_set_id
     w.ue(0)  # log2_max_frame_num_minus4 → frame_num is u(4)
-    w.ue(poc_type)  # pic_order_cnt_type
-    if poc_type == 0:
-        w.ue(POC_LSB_BITS - 4)  # log2_max_pic_order_cnt_lsb_minus4
-    w.ue(max_ref)  # max_num_ref_frames (1 P-GOP / 2 B-GOP tier)
+    w.ue(2)  # pic_order_cnt_type
+    w.ue(max_ref)  # max_num_ref_frames (1 P-GOP / 2 multi-ref tier)
     w.u(0, 1)  # gaps_in_frame_num_value_allowed_flag
     w.ue(width // MB - 1)  # pic_width_in_mbs_minus1
     w.ue(height // MB - 1)  # pic_height_in_map_units_minus1
@@ -287,13 +243,8 @@ def parse_sps(nal: bytes) -> dict:
         raise ValueError("high-profile SPS not supported")
     log2_max_frame_num = r.ue() + 4
     poc_type = r.ue()
-    log2_max_poc_lsb = None
-    if poc_type == 0:
-        log2_max_poc_lsb = r.ue() + 4
-        if log2_max_poc_lsb > 16:
-            raise ValueError("log2_max_pic_order_cnt_lsb out of range")
-    elif poc_type == 1:
-        raise ValueError("pic_order_cnt_type 1 not supported")
+    if poc_type != 2:
+        raise ValueError(f"pic_order_cnt_type {poc_type} not supported")
     max_ref = r.ue()
     r.u(1)  # gaps allowed
     width_mbs = r.ue() + 1
@@ -312,41 +263,29 @@ def parse_sps(nal: bytes) -> dict:
         "sps_id": sps_id,
         "log2_max_frame_num": log2_max_frame_num,
         "poc_type": poc_type,
-        "log2_max_poc_lsb": log2_max_poc_lsb,
         "max_num_ref_frames": max_ref,
         "width": width_mbs * MB,
         "height": height_mbs * MB,
     }
 
 
-def encode_pps(
-    deblocking_control: bool = False,
-    cabac: bool = False,
-    weighted_b: bool = False,
-) -> bytes:
-    """Minimal PPS.  ``deblocking_control=True`` sets
+def encode_pps(deblocking_control: bool = False) -> bytes:
+    """Minimal CAVLC PPS.  ``deblocking_control=True`` sets
     deblocking_filter_control_present_flag so the slice header can
     write ``disable_deblocking_filter_idc = 1`` — the Intra_16x16 tier
     (h264_intra.py) uses it to make its unfiltered reconstruction the
     conformant decoder output; the I_PCM path keeps the flag off (PCM
-    samples are exempt from the in-loop filter by spec).
-    ``cabac=True`` sets entropy_coding_mode_flag for the arithmetic
-    tier (h264_cabac.py) — the slice DECODER dispatches on the parsed
-    flag, so containers carry either entropy coder transparently.
-    ``weighted_b=True`` sets weighted_bipred_idc to 2 (EXPLICIT): B
-    slice headers then carry a pred_weight_table and predictions use
-    the 8.4.2.3.2 weighted forms — the fade-content tier
-    (h264_b.py ``weights``)."""
+    samples are exempt from the in-loop filter by spec)."""
     w = BitWriter()
     w.ue(0)  # pic_parameter_set_id
     w.ue(0)  # seq_parameter_set_id
-    w.u(1 if cabac else 0, 1)  # entropy_coding_mode_flag
+    w.u(0, 1)  # entropy_coding_mode_flag: CAVLC
     w.u(0, 1)  # bottom_field_pic_order_in_frame_present_flag
     w.ue(0)  # num_slice_groups_minus1
     w.ue(0)  # num_ref_idx_l0_default_active_minus1
     w.ue(0)  # num_ref_idx_l1_default_active_minus1
-    w.u(0, 1)  # weighted_pred_flag (P slices stay unweighted)
-    w.u(2 if weighted_b else 0, 2)  # weighted_bipred_idc
+    w.u(0, 1)  # weighted_pred_flag
+    w.u(0, 2)  # weighted_bipred_idc
     w.se(0)  # pic_init_qp_minus26
     w.se(0)  # pic_init_qs_minus26
     w.se(0)  # chroma_qp_index_offset
@@ -366,6 +305,8 @@ def parse_pps(nal: bytes) -> dict:
         "sps_id": r.ue(),
         "entropy_coding_mode": r.u(1),
     }
+    if out["entropy_coding_mode"]:
+        raise ValueError("CABAC (entropy_coding_mode_flag 1) not supported")
     r.u(1)  # bottom_field_pic_order_in_frame_present_flag
     if r.ue() != 0:
         raise ValueError("slice groups not supported")
@@ -373,9 +314,8 @@ def parse_pps(nal: bytes) -> dict:
     r.ue()  # num_ref_idx_l1_default_active_minus1
     if r.u(1):  # weighted_pred_flag
         raise ValueError("weighted P prediction not supported")
-    out["weighted_bipred_idc"] = r.u(2)
-    if out["weighted_bipred_idc"] == 1:
-        raise ValueError("implicit weighted bi-prediction not supported")
+    if r.u(2):  # weighted_bipred_idc
+        raise ValueError("weighted bi-prediction not supported")
     out["pic_init_qp"] = 26 + r.se()
     r.se()  # pic_init_qs_minus26
     out["chroma_qp_index_offset"] = r.se()
@@ -441,8 +381,6 @@ def decode_idr_frame(nal: bytes, sps: dict) -> np.ndarray:
     r.ue()  # pic_parameter_set_id
     r.u(sps["log2_max_frame_num"])  # frame_num
     r.ue()  # idr_pic_id
-    if sps["poc_type"] == 0:
-        raise ValueError("poc_type 0 slice headers not supported")
     r.u(2)  # dec_ref_pic_marking (IDR two flags)
     r.se()  # slice_qp_delta
     w_mbs, h_mbs = sps["width"] // MB, sps["height"] // MB
@@ -487,18 +425,17 @@ def encode_mp4_h264(
     codec: str = "i_pcm",
     qp: int = 26,
     search_range: int = 8,
-    b_direct: str = "spatial",
-    b_weighted: bool = False,
 ) -> bytes:
     """Real MP4: ftyp + mdat (length-prefixed IDR NALs) + moov with the
     full stsd(avc1+avcC)/stts/stsc/stsz/stco sample-table chain.
 
     ``frames``: uint8 array (n, H, W), H and W multiples of 16.
-    ``codec``: ``"i_pcm"`` (lossless, the FULL-oracle path),
-    ``"i16"`` (Intra_16x16 + CAVLC at ``qp``), or ``"intra"`` (full
-    baseline intra: per-MB Intra_4x4/Intra_16x16/I_PCM min-bits mode
-    decision) — both predicted tiers live in h264_intra.py and use the
-    deblocking-control PPS so the slices turn the in-loop filter off."""
+    ``codec``: ``"i_pcm"`` (lossless), ``"i16"`` (Intra_16x16 + CAVLC
+    at ``qp``), ``"intra"`` (full baseline intra: per-MB
+    Intra_4x4/Intra_16x16/I_PCM min-bits mode decision) — both
+    predicted intra tiers live in h264_intra.py and use the
+    deblocking-control PPS so the slices turn the in-loop filter off —
+    or the GOP tiers ``"i16p"`` / ``"i16p2"`` (h264_inter.py)."""
     frames = np.asarray(frames, dtype=np.uint8)
     if frames.ndim != 3:
         raise ValueError("frames must be (n, h, w)")
@@ -518,49 +455,28 @@ def encode_mp4_h264(
         )
         enc = lambda f, i: fn(f, qp=qp, idr_pic_id=i % 2)  # noqa: E731
         pps = encode_pps(deblocking_control=True)
-    elif codec in ("i16_cabac", "intra_cabac"):
+    elif codec in ("i16p", "i16p2"):
+        # GOP tiers (h264_inter.py): IDR(Intra_16x16) + P+; the encoder
+        # closure carries the reference picture(s) exactly as the
+        # decoder will reconstruct them.  "i16p2" keeps a 2-deep list 0
+        # — every P slice after the second picture codes a per-MB te(v)
+        # ref_idx_l0 against the two most recent references (the
+        # multi-reference tier, r12).
         from real_time_trip_processing_project_spark.operators import (
-            h264_cabac as HC,
-        )
-
-        enc = lambda f, i: HC.encode_idr_frame_cabac(  # noqa: E731
-            f, qp=qp, idr_pic_id=i % 2, allow_i4=codec == "intra_cabac"
-        )
-        pps = encode_pps(deblocking_control=True, cabac=True)
-    elif codec in ("i16p", "i16p_cabac", "i16p2"):
-        # GOP tiers (h264_inter.py / h264_cabac.py): IDR(Intra_16x16) +
-        # P+; the encoder closure carries the reference picture(s)
-        # exactly as the decoder will reconstruct them.  "i16p2" keeps
-        # a 2-deep list 0 — every P slice after the second picture
-        # codes a per-MB te(v) ref_idx_l0 against the two most recent
-        # references (the multi-reference tier, r12).
-        from real_time_trip_processing_project_spark.operators import (
-            h264_cabac as HC,
             h264_inter as HP,
             h264_intra as HI,
         )
 
-        cab = codec == "i16p_cabac"
         two_ref = codec == "i16p2"
         dpb: list = []  # most recent LAST
 
         def enc(f, i):
             if i == 0:
-                if cab:
-                    nal, ry, rc = HC.encode_idr_frame_cabac(
-                        f, qp=qp, idr_pic_id=0, return_recon=True
-                    )
-                else:
-                    nal, ry, rc = HI.encode_idr_frame_i16(
-                        f, qp=qp, idr_pic_id=0,
-                        return_recon=True, return_chroma=True,
-                    )
-                dpb.clear()
-            elif cab:
-                nal, ry, rc = HC.encode_p_frame_cabac(
-                    f, dpb[-1][0], dpb[-1][1], qp=qp, frame_num=i,
-                    search_range=search_range,
+                nal, ry, rc = HI.encode_idr_frame_i16(
+                    f, qp=qp, idr_pic_id=0,
+                    return_recon=True, return_chroma=True,
                 )
+                dpb.clear()
             else:
                 nal, ry, rc = HP.encode_p_frame(
                     f, dpb[-1][0], dpb[-1][1], qp=qp, frame_num=i,
@@ -573,43 +489,11 @@ def encode_mp4_h264(
             del dpb[:-2]
             return nal
 
-        pps = encode_pps(deblocking_control=True, cabac=cab)
-    elif codec in ("i16pb", "i16pb_cabac"):
-        # B tier (h264_b.py / h264_cabac.py): decode-order IDR P B P B …
-        # with display indexes carried out-of-band into the ctts box
-        # below; the SPS switches to poc_type 0 (decode order ≠ display
-        # order) with a 2-picture DPB
-        enc = None
-        pps = encode_pps(
-            deblocking_control=True, cabac=codec == "i16pb_cabac",
-            weighted_b=b_weighted,
-        )
+        pps = encode_pps(deblocking_control=True)
     else:
         raise ValueError(f"unknown codec {codec!r}")
-    display_order = None  # per decode-order sample; ctts written when set
-    if codec in ("i16pb", "i16pb_cabac"):
-        from real_time_trip_processing_project_spark.operators import (
-            h264_b as HB,
-        )
-
-        sps = encode_sps(w, h, max_ref=2, poc_type=0)
-        gop = HB.encode_b_gop(
-            frames, qp=qp, search_range=search_range,
-            cabac=codec == "i16pb_cabac", direct_mode=b_direct,
-            weighted=b_weighted,
-        )
-        nals = [nal for nal, _d in gop]
-        display_order = [d for _nal, d in gop]
-    else:
-        sps = encode_sps(
-            w, h,
-            max_ref=(
-                2
-                if codec == "i16p2"
-                else 1 if codec in ("i16p", "i16p_cabac") else 0
-            ),
-        )
-        nals = [enc(f, i) for i, f in enumerate(frames)]
+    sps = encode_sps(w, h, max_ref={"i16p": 1, "i16p2": 2}.get(codec, 0))
+    nals = [enc(f, i) for i, f in enumerate(frames)]
     samples = [struct.pack(">I", len(nal)) + nal for nal in nals]
     ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomavc1")
     mdat_payload = b"".join(samples)
@@ -668,28 +552,6 @@ def encode_mp4_h264(
         b"stts", 0, 0,
         struct.pack(">III", 1, n, MP4_TIMESCALE // fps),
     )
-    # ctts composition-offset box (version 0, unsigned): written only
-    # when decode order differs from display order (the B tier).
-    # CT(i) = DT(i) + offset(i) with offset = (display − decode + 1)
-    # ticks — the +1 keeps every v0 offset non-negative (a B sample
-    # displays one tick before its decode slot)
-    ctts = b""
-    if display_order is not None:
-        tick = MP4_TIMESCALE // fps
-        offsets = [
-            (d - i + 1) * tick for i, d in enumerate(display_order)
-        ]
-        runs: list[list[int]] = []
-        for off in offsets:
-            if runs and runs[-1][1] == off:
-                runs[-1][0] += 1
-            else:
-                runs.append([1, off])
-        ctts = _full(
-            b"ctts", 0, 0,
-            struct.pack(">I", len(runs))
-            + b"".join(struct.pack(">II", c, o) for c, o in runs),
-        )
     stsc = _full(b"stsc", 0, 0, struct.pack(">IIII", 1, 1, n, 1))
     stsz = _full(
         b"stsz", 0, 0,
@@ -714,7 +576,7 @@ def encode_mp4_h264(
             + b"".join(struct.pack(">I", x) for x in sync),
         )
     )
-    stbl = _box(b"stbl", stsd + stts + ctts + stsc + stsz + stco + stss)
+    stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco + stss)
     vmhd = _full(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0))
     dref = _full(
         b"dref", 0, 0, struct.pack(">I", 1) + _full(b"url ", 0, 1, b"")
@@ -886,7 +748,7 @@ def _parse_mp4_strict(payload: bytes) -> dict:
         deltas.extend([delta] * min(cnt, n_samples - len(deltas)))
     if stts_count != n_samples:
         consistent = False
-    # ctts composition offsets (the B tier): run-length decoded to one
+    # ctts composition offsets: run-length decoded to one
     # offset per sample; a count total that misses n_samples breaks
     # the decode→display mapping and flips consistency
     ctts_offsets = None
@@ -930,45 +792,27 @@ def _parse_mp4_strict(payload: bytes) -> dict:
     }
 
 
-def slice_kind(nal: bytes) -> int:
-    """Peek a slice NAL's slice_type % 5 (0=P, 1=B, 2=I) from the first
-    two header fields — the GOP decoder's per-NAL dispatch (a B stream
-    interleaves P and B NALs of the same nal_unit_type 1)."""
-    if not nal:
-        raise ValueError("empty NAL")
-    r = BitReader(ebsp_to_rbsp(nal[1:9]))  # both fields sit in the head
-    r.ue()  # first_mb_in_slice
-    return r.ue() % 5
-
-
 def decode_mp4_h264(payload: bytes, every_nth: int = 1):
     """Decode an MP4 of H.264 samples:
     ``(sps, [(frame_idx, frame_array), ...])``.
 
-    All-sync containers (no stss box — the I_PCM/i16/intra/CABAC
-    tiers): ``every_nth`` skips samples by TABLE lookup, so an
-    unsampled frame costs nothing (every sample is an IDR, the ideal
-    random-access case).  GOP containers (stss present — the i16p
-    tier, h264_inter.py): samples decode SEQUENTIALLY carrying the
-    reference picture, and ``every_nth`` selects which frames are
-    EMITTED — sampling then costs the GOP prefix, the honest price of
-    temporal prediction.  Dispatch is per macroblock within I slices
-    (mixed PCM/predicted slices decode) and per NAL type across the
-    stream; the PPS entropy_coding_mode_flag selects CAVLC/CABAC."""
+    All-sync containers (no stss box — the I_PCM/i16/intra tiers):
+    ``every_nth`` skips samples by TABLE lookup, so an unsampled frame
+    costs nothing (every sample is an IDR, the ideal random-access
+    case).  GOP containers (stss present — the i16p/i16p2 tiers,
+    h264_inter.py): samples decode SEQUENTIALLY carrying the reference
+    pictures, and ``every_nth`` selects which frames are EMITTED —
+    sampling then costs the GOP prefix, the honest price of temporal
+    prediction.  Dispatch is per macroblock within I slices (mixed
+    PCM/predicted slices decode) and per NAL type across the stream.
+    pic_order_cnt_type 2 (enforced by :func:`parse_sps`) makes decode
+    order the output order, so frame indexes are sample indexes."""
     from real_time_trip_processing_project_spark.operators import (
         h264_intra as HI,
     )
 
     info = parse_mp4(bytes(payload))
     sps, pps, ls = info["sps"], info["pps"], info["length_size"]
-    if pps.get("entropy_coding_mode"):
-        from real_time_trip_processing_project_spark.operators import (
-            h264_cabac as HC,
-        )
-
-        slice_decode = HC.decode_idr_frame_cabac
-    else:
-        slice_decode = HI.decode_idr_frame_auto
 
     def _nals(off, size):
         pos, end = off, off + size
@@ -986,38 +830,16 @@ def decode_mp4_h264(payload: bytes, every_nth: int = 1):
                 continue
             for nal in _nals(off, size):
                 if nal and nal[0] & 0x1F == 5:
-                    out.append((i, slice_decode(nal, sps, pps)))
+                    out.append((i, HI.decode_idr_frame_auto(nal, sps, pps)))
         return sps, out
 
     # GOP path: sequential decode carrying a sliding-window DPB of the
-    # SPS's max_num_ref_frames most recent references.  Sample order is
-    # decode order; when a ctts box is present (the B tier) frames are
-    # emitted under their DISPLAY index — the rank of each sample's
-    # composition time — and ``every_nth`` selects display indexes.
+    # SPS's max_num_ref_frames most recent (y, c) references, most
+    # recent LAST
     from real_time_trip_processing_project_spark.operators import (
         h264_inter as HP,
     )
 
-    cabac = bool(pps.get("entropy_coding_mode"))
-    if cabac:
-        from real_time_trip_processing_project_spark.operators import (
-            h264_cabac as HC,
-        )
-    n = len(info["samples"])
-    disp = list(range(n))
-    if info.get("ctts_offsets") is not None:
-        deltas = info["stts_deltas"]
-        dt = 0
-        cts = []
-        for i in range(n):
-            cts.append(dt + info["ctts_offsets"][i])
-            dt += deltas[i] if i < len(deltas) else (deltas[-1] if deltas else 1)
-        order = sorted(range(n), key=lambda i: (cts[i], i))
-        for rank, i in enumerate(order):
-            disp[i] = rank
-    # DPB entries are (y, c, mvs) most-recent-last; B predicts from
-    # refs[-2]/refs[-1] and feeds refs[-1]'s motion field into the
-    # spatial-direct colZeroFlag (mvs is None for intra/IDR pictures)
     refs: list = []
     max_ref = max(1, sps.get("max_num_ref_frames") or 1)
     for i, (off, size) in enumerate(info["samples"]):
@@ -1026,61 +848,21 @@ def decode_mp4_h264(payload: bytes, every_nth: int = 1):
                 continue
             ntype = nal[0] & 0x1F
             if ntype == 5:
-                if cabac:
-                    y, c = HC.decode_idr_frame_cabac(
-                        nal, sps, pps, return_chroma=True
-                    )
-                else:
-                    y, c = HI.decode_idr_frame_auto(
-                        nal, sps, pps, return_chroma=True
-                    )
-                refs = [(y, c, None)]  # IDR empties the DPB
+                y, c = HI.decode_idr_frame_auto(
+                    nal, sps, pps, return_chroma=True
+                )
+                refs = [(y, c)]  # IDR empties the DPB
             elif ntype == 1:
                 if not refs:
                     raise ValueError("predicted slice before any IDR")
-                kind = slice_kind(nal)
-                if kind == 1:  # B: past=L0, future=L1
-                    if len(refs) < 2:
-                        raise ValueError("B slice with fewer than 2 refs")
-                    if cabac:
-                        y, c = HC.decode_b_frame_cabac(
-                            nal, sps, pps,
-                            refs[-2][0], refs[-2][1],
-                            refs[-1][0], refs[-1][1],
-                            col_mvs=refs[-1][2],
-                        )
-                    else:
-                        from real_time_trip_processing_project_spark.operators import (  # noqa: E501
-                            h264_b as HB,
-                        )
-
-                        y, c = HB.decode_b_frame(
-                            nal, sps, pps,
-                            refs[-2][0], refs[-2][1],
-                            refs[-1][0], refs[-1][1],
-                            col_mvs=refs[-1][2],
-                        )
-                    # non-reference: the DPB is untouched
-                elif kind == 0:
-                    if cabac:
-                        y, c, pmvs = HC.decode_p_frame_cabac(
-                            nal, sps, pps, refs[-1][0], refs[-1][1],
-                            return_mvs=True,
-                        )
-                    else:
-                        y, c, pmvs = HP.decode_p_frame(
-                            nal, sps, pps, refs[-1][0], refs[-1][1],
-                            extra_refs=(
-                                [refs[-2][:2]] if len(refs) >= 2 else None
-                            ),
-                            return_mvs=True,
-                        )
-                    refs = (refs + [(y, c, pmvs)])[-max_ref:]
-                else:
-                    raise ValueError("non-IDR I slices not supported")
+                # decode_p_frame rejects B and non-IDR I slices
+                y, c = HP.decode_p_frame(
+                    nal, sps, pps, refs[-1][0], refs[-1][1],
+                    extra_refs=[refs[-2]] if len(refs) >= 2 else None,
+                )
+                refs = (refs + [(y, c)])[-max_ref:]
             else:
                 continue
-            if disp[i] % every_nth == 0:
-                out.append((disp[i], y))
-    out.sort(key=lambda t: t[0])
+            if i % every_nth == 0:
+                out.append((i, y))
     return sps, out

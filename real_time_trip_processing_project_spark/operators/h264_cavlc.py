@@ -193,8 +193,8 @@ def _write_coeff_token(bw: BitWriter, nc: int, t1: int, tc: int) -> None:
 
 
 #: Inverse {(len, code): key} maps, built ONCE at import — decode is
-#: the hot loop of the timed multimodal_mp4_i16_stats query, and
-#: rebuilding a ~62-entry dict per residual-block read would dominate.
+#: the hot loop of every CAVLC slice decode, and rebuilding a ~62-entry
+#: dict per residual-block read would dominate.
 _REV: dict[int, dict[tuple[int, int], object]] = {}
 
 

@@ -1,6 +1,5 @@
-"""Inter-predicted (P) H.264 frames — temporal prediction, the last
-codec seam the r10 verdict named ("CABAC / inter"; CABAC landed in
-``h264_cabac.py``, this closes inter).
+"""Inter-predicted (P) H.264 frames — temporal prediction over the
+baseline intra tier of ``h264_intra.py``.
 
 Scope, stated precisely:
 
@@ -36,8 +35,7 @@ Scope, stated precisely:
   rejects them (mb_type >= 5), the same explicit-seam discipline as
   the rest of the family.
 
-Shared-table caveat (same stance as ``h264_cabac.py``'s context
-inits): ``CBP_INTER_ME`` is transcribed from the published Table 9-4
+Shared-table caveat: ``CBP_INTER_ME`` is transcribed from the published Table 9-4
 inter column; encoder and decoder share it, so a transcription slip
 could only produce streams nonconformant to EXTERNAL decoders (absent
 from this container), never wrong pixels here.  Tests pin that it is
@@ -47,7 +45,7 @@ Reference parity note: the reference pipeline
 (Real-Time-Trip-Processing-Project) has no media processing at all —
 north-star multimodal tier.
 
-At 100 TB: row-local Arrow-batched work inside ``mapInPandas``;
+At 100 TB: row-local work that would run inside ``mapInPandas``;
 nothing here shuffles.
 """
 
@@ -57,7 +55,6 @@ import numpy as np
 
 from real_time_trip_processing_project_spark.operators.h264 import (
     MB,
-    POC_LSB_BITS as H_POC_LSB_BITS,
     BitReader,
     BitWriter,
     ebsp_to_rbsp,
@@ -327,9 +324,7 @@ def _analyze_mb_from_pred(
 ) -> tuple:
     """The prediction-agnostic half of :func:`_analyze_mb_p`:
     transform/quant the residual against an ALREADY-COMPUTED prediction
-    and reconstruct exactly as the decoder will — shared with the B
-    tier (h264_b.py), whose bi-predictive average no single-reference
-    motion compensation can produce."""
+    and reconstruct exactly as the decoder will."""
     y0, x0 = mby * MB, mbx * MB
     block = frame[y0 : y0 + MB, x0 : x0 + MB].astype(np.int64)
     diff = block - pred
@@ -425,15 +420,12 @@ def encode_p_frame(
     qp: int = 26,
     frame_num: int = 1,
     search_range: int = 8,
-    poc_lsb: int | None = None,
     extra_refs: list | None = None,
-    return_mvs: bool = False,
 ) -> tuple:
     """One P-slice NAL (type 1) predicting from ``(ref_y, ref_c)``.
     Returns ``(nal, recon_y, recon_c)`` — the reconstruction is the
     next frame's reference and must (and does, bit-exactly) match the
-    decoder's.  ``poc_lsb``: set iff the stream's SPS is poc_type 0
-    (the B tier) — writes pic_order_cnt_lsb after frame_num.
+    decoder's.
 
     ``extra_refs`` (r12, the multi-reference half of the former
     "B frames / multi-reference" seam): ``[(ref1_y, ref1_c)]`` — a
@@ -472,8 +464,6 @@ def encode_p_frame(
     bw.ue(5)  # slice_type 5: P (all slices)
     bw.ue(0)  # pic_parameter_set_id
     bw.u(frame_num & 15, 4)  # frame_num
-    if poc_lsb is not None:  # poc_type-0 SPS (the B tier)
-        bw.u(poc_lsb, H_POC_LSB_BITS)
     bw.u(1 if multi else 0, 1)  # num_ref_idx_active_override_flag
     if multi:
         bw.ue(1)  # num_ref_idx_l0_active_minus1: two pictures
@@ -553,10 +543,6 @@ def encode_p_frame(
         bw.ue(skip_run)  # trailing skips
     bw.rbsp_trailing_bits()
     nal = b"\x61" + rbsp_to_ebsp(bw.getvalue())
-    if return_mvs:
-        # the motion field becomes the B tier's colocated-picture input
-        # (spatial direct colZeroFlag, h264_b._direct_mvs)
-        return nal, recon_y, recon_c, mvs
     return nal, recon_y, recon_c
 
 
@@ -566,8 +552,7 @@ def _write_inter_residual(
 ):
     """CAVLC residual syntax of one inter macroblock (4x4 luma per
     8x8 CBP group — no DC hierarchy — plus the shared chroma DC/AC
-    pipeline) and the nC bookkeeping commit.  Shared by the P
-    (this module) and B (h264_b.py) encoders."""
+    pipeline) and the nC bookkeeping commit."""
     nz_updates: dict[tuple, int] = {}
     for blk in range(16):
         x, y = HI._BLK_XY[blk]
@@ -665,7 +650,6 @@ def _set_nz(nz_y, nz_c, mby, mbx, tc):
 def decode_p_frame(
     nal: bytes, sps: dict, pps: dict, ref_y: np.ndarray, ref_c: list,
     extra_refs: list | None = None,
-    return_mvs: bool = False,
 ) -> tuple:
     """The normative inverse of :func:`encode_p_frame`.  Returns
     ``(recon_y, recon_c)``.  Malformed data → ValueError (the codec
@@ -681,8 +665,6 @@ def decode_p_frame(
         raise ValueError("not a P slice")
     r.ue()  # pic_parameter_set_id
     r.u(sps["log2_max_frame_num"])  # frame_num
-    if sps["poc_type"] == 0:  # the B tier's SPS (h264_b.py)
-        r.u(sps["log2_max_poc_lsb"])  # pic_order_cnt_lsb
     multi = bool(r.u(1))  # num_ref_idx_active_override_flag
     if multi:
         if r.ue() != 1:
@@ -787,6 +769,4 @@ def decode_p_frame(
         i += 1
     if r.u(1) != 1:
         raise ValueError("missing rbsp_stop_one_bit")
-    if return_mvs:
-        return recon_y, recon_c, mvs
     return recon_y, recon_c

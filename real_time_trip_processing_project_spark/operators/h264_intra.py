@@ -10,8 +10,8 @@ min-bits mode decision — alongside the lossless I_PCM profile.  Every
 decode path is the normative inverse (§8.3 prediction, §8.5
 transform/scaling, §9.2 CAVLC), so the decoder reconstructs BIT-EXACTLY
 what the encoder's own reconstruction loop produced; distortion vs the
-source is the quantizer's, floored in tests/bench like the MJPEG
-float-DCT path.
+source is the quantizer's, floored in tests like the MJPEG float-DCT
+path.
 
 Spec conformance notes (ITU-T H.264):
 
@@ -32,8 +32,9 @@ Spec conformance notes (ITU-T H.264):
   fuzz suite in tests/test_h264_intra.py (same discipline as the
   I_PCM/MP4 layer, which survived external byte-layout review).
 
-At 100 TB this is row-local Arrow-batched work inside ``mapInPandas``
-(multimodal.py wires the MP4 container around it); nothing shuffles.
+At 100 TB this is row-local work that would run inside
+``mapInPandas`` around the MP4 container of ``h264.py``; nothing
+shuffles.
 """
 
 from __future__ import annotations
@@ -45,7 +46,6 @@ from real_time_trip_processing_project_spark.operators import (
 )
 from real_time_trip_processing_project_spark.operators.h264 import (
     MB,
-    POC_LSB_BITS as H_POC_LSB_BITS,
     BitReader,
     BitWriter,
     I_PCM_MB_TYPE,
@@ -489,9 +489,8 @@ def _analyze_mb_i16(
     encoding: mode selection, forward transform + quantization, and
     the decoder-exact reconstruction.  Returns ``(mode, cbp_luma,
     dc_levels, ac_levels, c_dc_levels, c_ac_levels, c_preds,
-    cbp_chroma, rec_y, rec_c)`` — the CAVLC writer below and the CABAC
-    writer (operators/h264_cabac.py) both serialize exactly this model
-    state, so their decoded pixels are bit-identical by construction."""
+    cbp_chroma, rec_y, rec_c)`` — the model state the CAVLC writer
+    below serializes."""
     y0, x0 = mby * MB, mbx * MB
     block = src_y[y0 : y0 + MB, x0 : x0 + MB].astype(np.int64)
     cands = [2]
@@ -625,19 +624,15 @@ def encode_idr_frame_i16(
     pcm_fallback: bool = True,
     return_recon: bool = False,
     return_chroma: bool = False,
-    poc_lsb: int | None = None,
 ):
     """One IDR NAL of Intra_16x16 macroblocks (chroma constant 128,
     per-MB I_PCM fallback) — :func:`_encode_idr_frame` with the
-    Intra_4x4 trial disabled.  Kept as the pure-I16 tier the
-    ``multimodal_mp4_i16_stats`` query and its floors are pinned to.
+    Intra_4x4 trial disabled; the IDR picture of the GOP tiers.
     ``return_chroma`` appends the chroma reconstruction to the
-    return (the inter tier needs the full reference picture).
-    ``poc_lsb``: set iff the stream's SPS is poc_type 0 (the B tier,
-    h264_b.py) — writes pic_order_cnt_lsb after idr_pic_id."""
+    return (the inter tier needs the full reference picture)."""
     return _encode_idr_frame(
         frame, qp, idr_pic_id, pcm_fallback, return_recon,
-        allow_i4=False, return_chroma=return_chroma, poc_lsb=poc_lsb,
+        allow_i4=False, return_chroma=return_chroma,
     )
 
 
@@ -665,8 +660,6 @@ def decode_idr_frame_auto(
     r.ue()  # pic_parameter_set_id
     r.u(sps["log2_max_frame_num"])
     r.ue()  # idr_pic_id
-    if sps["poc_type"] == 0:  # the B tier's SPS (h264_b.py)
-        r.u(sps["log2_max_poc_lsb"])  # pic_order_cnt_lsb
     r.u(2)  # dec_ref_pic_marking
     qp = 26 + r.se()
     _check_qp(qp)
@@ -1108,8 +1101,8 @@ def _analyze_mb_i4(
     (the Intra_4x4 twin of :func:`_analyze_mb_i16`): run the 16-block
     directional trial with the save/restore choreography and return
     ``(modes_out, flags, rems, levels, cbp, c_dc_levels, c_ac_levels,
-    c_preds, cbp_chroma, rec_y, rec_c)``.  The CAVLC writer below and
-    the CABAC writer (h264_cabac.py) both serialize exactly this."""
+    c_preds, cbp_chroma, rec_y, rec_c)``, which the CAVLC writer below
+    serializes."""
     y0, x0 = mby * MB, mbx * MB
     # Trial writes are confined to THIS macroblock's 16x16 region (the
     # halo is only READ), so instead of copying the whole frame per MB
@@ -1326,7 +1319,6 @@ def _encode_idr_frame(
     return_recon: bool,
     allow_i4: bool,
     return_chroma: bool = False,
-    poc_lsb: int | None = None,
 ):
     """Shared IDR-slice driver: ONE copy of the slice header, the
     per-MB trial/commit loop, the I_PCM fallback block and the
@@ -1357,8 +1349,6 @@ def _encode_idr_frame(
     bw.ue(0)  # pic_parameter_set_id
     bw.u(0, 4)  # frame_num
     bw.ue(idr_pic_id)
-    if poc_lsb is not None:  # poc_type-0 SPS (the B tier)
-        bw.u(poc_lsb, H_POC_LSB_BITS)
     bw.u(0, 1)  # no_output_of_prior_pics_flag
     bw.u(0, 1)  # long_term_reference_flag
     bw.se(qp - 26)  # slice_qp_delta (pic_init_qp 26)

@@ -9,12 +9,9 @@ audio (RIFF/WAVE PCM16), image (24-bit uncompressed BMP), and video
 (uncompressed 24-bit AVI: RIFF header tree, DIB frame chunks, idx1
 index) — plus two real COMPRESSED paths since r7: baseline JPEG
 (DCT/quant/Huffman, operators/jpeg.py) carried as MJPEG-in-AVI, and
-lossless PNG (DEFLATE + scanline filters, operators/png.py).
-Since r9, MP4/H.264 is real too: an I_PCM-profile encoder/decoder over
-a full ISO-BMFF container (operators/h264.py) — lossless, so its pixel
-queries are fully SQL-oracled.  The remaining marked seam behind
-``codec="real"`` narrows to PREDICTED H.264 macroblocks
-(Intra/CAVLC/CABAC, inter frames), which genuinely need PIL/av.
+lossless PNG (DEFLATE + scanline filters, operators/png.py).  Any
+other container behind ``codec="real"`` is the marked seam: it needs
+PIL/av.
 
 Layout conventions that matter at scale:
 
@@ -44,10 +41,8 @@ from pyspark.sql import types as T
 def _text_frames(text: str, frame_bytes: int):
     """UTF-8 bytes → a flat zero-padded array holding ≥1 frames of
     ``frame_bytes`` each — THE deterministic text→pixels mapping every
-    synthetic media encoder shares (AVI RGB24, MJPEG, MP4 I_PCM, MP4
-    Intra_16x16).  One definition so frame inventories stay
-    bit-identical across codecs: the MP4 SQL oracles and the i16-vs-
-    I_PCM parity test both assume identical frame counts per doc."""
+    synthetic media encoder shares (AVI RGB24, MJPEG).  One definition
+    so frame inventories stay bit-identical across codecs."""
     import numpy as np
 
     b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
@@ -429,21 +424,10 @@ def _real_decode(payload: bytes) -> dict:
     """Real codec for the seam: WAV (RIFF/PCM16) payloads decode fully
     via :func:`decode_wav_pcm16` (frame_count = sample frames; the
     image-only width/height stay NULL for audio); BMP, uncompressed
-    AVI, MJPEG AVI, bare baseline JPEG, PNG and MP4/H.264 — full
-    baseline intra (I_PCM, Intra_16x16, Intra_4x4 + CAVLC —
-    operators/h264.py, h264_intra.py), CABAC full intra + P slices
-    (h264_cabac.py), quarter-pel P-frame GOPs (h264_inter.py) and
-    bi-predictive B-frame GOPs with ctts reordering (h264_b.py, r12)
-    — all decode for real, as do the 2-reference ref_idx P GOPs
-    (h264_inter.py ``extra_refs``, r12) and CABAC B GOPs
-    (h264_cabac.py, r12).  The remaining explicit
-    ``NotImplementedError`` seam is any OTHER container/codec format
-    (needs PIL/av, absent from this container); within H.264 the
-    ValueError-gated sub-seams are >2 active references,
-    ref_pic_list_modification, sub-16x16 B partitions, implicit
-    weighted prediction and chroma weights (h264_b.py docstring;
-    B_Skip/B_Direct with BOTH direct derivations AND explicit
-    weighted bi-prediction shipped r12)."""
+    AVI, MJPEG AVI, bare baseline JPEG and PNG decode for real too.
+    The remaining explicit ``NotImplementedError`` seam is any OTHER
+    container/codec format (needs PIL/av, absent from this
+    container)."""
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         samples, _rate, n_channels = decode_wav_pcm16(bytes(payload))
         n_frames = len(samples) if n_channels == 1 else samples.shape[0]
@@ -514,33 +498,15 @@ def _real_decode(payload: bytes) -> dict:
             "width": px.shape[1],
             "height": px.shape[0],
         }
-    if len(payload) >= 12 and payload[4:8] == b"ftyp":
-        from real_time_trip_processing_project_spark.operators import (
-            h264 as H,
-        )
-
-        info = H.parse_mp4(bytes(payload))
-        return {
-            "n_bytes": len(payload),
-            "content_hash": hashlib.md5(payload).hexdigest(),
-            "frame_count": len(info["samples"]),
-            "width": info["width"],
-            "height": info["height"],
-        }
     # STUB: every format this repo EMITS decodes for real — audio
     # (RIFF/PCM16, mu-law), image (BMP, PNG, baseline JPEG),
-    # uncompressed AVI, MJPEG AVI, and the whole MP4/H.264 family
-    # (I_PCM, Intra_16x16, Intra_4x4 + CAVLC as of r10; CABAC full
-    # intra + P slices as of r11; quarter-pel P GOPs as of r11;
-    # bi-predictive B GOPs with ctts reordering as of r12 —
-    # operators/h264.py, h264_intra.py, h264_cabac.py, h264_inter.py,
-    # h264_b.py).  The remaining seam is any OTHER container format.
+    # uncompressed AVI and MJPEG AVI.  The remaining seam is any OTHER
+    # container format.
     raise NotImplementedError(
         "real decode supports WAV (RIFF/PCM16 + mu-law), BMP (24-bit "
-        "BI_RGB), PNG (8-bit gray/RGB), uncompressed AVI, MJPEG AVI, "
-        "baseline grayscale JPEG, and MP4/H.264 (full baseline intra "
-        "CAVLC + CABAC full intra/P, quarter-pel P GOPs, B GOPs with "
-        "ctts); other container formats need PIL/av — use codec='fake'"
+        "BI_RGB), PNG (8-bit gray/RGB), uncompressed AVI, MJPEG AVI and "
+        "baseline grayscale JPEG; other container formats need PIL/av "
+        "— use codec='fake'"
     )
 
 
@@ -1500,397 +1466,4 @@ def mulaw_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(
         run,
         "media_id long, n_samples long, sum_decoded long, peak_abs long",
-    )
-
-
-# ---------------------------------------------------------------------------
-# MP4 / H.264 (operators/h264.py): the former seam, now a real codec path
-
-MP4_W = 16
-MP4_H = 16
-
-
-def media_mp4_from_documents(
-    docs: DataFrame,
-    width: int = MP4_W,
-    height: int = MP4_H,
-    codec: str = "i_pcm",
-    qp: int = 26,
-) -> DataFrame:
-    """Media table whose payloads are REAL MP4s: each doc's text bytes
-    fill consecutive ``height×width`` grayscale frames (zero-padded,
-    ≥1 frame), every frame encoded as an H.264 IDR picture of I_PCM
-    macroblocks inside an ISO-BMFF container with full sample tables
-    (operators/h264.py:encode_mp4_h264).  I_PCM is the profile's
-    lossless mode, so — unlike the MJPEG float-DCT path — the decoded
-    pixels here are BIT-EXACT and the consumer queries carry FULL SQL
-    oracles.  ``codec``/``qp`` select the slice encoder exactly as
-    :func:`h264.encode_mp4_h264` does (``"i16"``/``"intra"`` give the
-    lossy predicted tiers — container invariants stay byte-exact, only
-    pixel values pick up quantizer loss)."""
-    import numpy as np
-
-    from real_time_trip_processing_project_spark.operators import h264 as H
-
-    frame_bytes = width * height
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                px = _text_frames(t, frame_bytes)
-                n_frames = len(px) // frame_bytes
-                payloads.append(
-                    H.encode_mp4_h264(
-                        px.reshape(n_frames, height, width),
-                        codec=codec,
-                        qp=qp,
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    from real_time_trip_processing_project_spark.sources.readers import (
-        spread_small_input,
-    )
-
-    mp4 = spread_small_input(docs.select("doc_id", "text")).mapInPandas(
-        run, "media_id long, payload binary"
-    )
-    return mp4.select(
-        "media_id",
-        "payload",
-        F.struct(
-            F.lit("video/mp4").alias("mime"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.lit("h264-encoder").alias("source"),
-        ).alias("meta"),
-    )
-
-
-def mp4_container_index(
-    media: DataFrame, rate_bound_bytes: int | None = None
-) -> DataFrame:
-    """EXACT box-tree index of an MP4/H.264 payload — the container
-    sibling of :func:`mjpeg_container_index`, byte-exact and fully
-    SQL-oracled.  Per payload:
-
-    - ``frame_count`` / ``width`` / ``height`` from the sample table
-      and the avc1 entry, cross-checked against the PARSED SPS (a
-      mismatch between container and bitstream dims flips
-      ``index_consistent``);
-    - ``idr_ok_frames``: samples whose length-prefixed NAL is an IDR
-      slice (type 5) starting at macroblock 0 — every encoder sample
-      must qualify;
-    - ``index_consistent``: stsc×stco×stsz resolve to exactly
-      stsz.sample_count samples, all inside mdat, each holding exactly
-      its length-prefixed NALs, stts covering each sample once
-      (operators/h264.py:parse_mp4);
-    - ``px_count``: frames × width × height.
-
-    ``rate_bound_bytes`` (r10 verdict item 6, for the lossy-codec
-    variants): when set, appends a ``within_rate_bound`` column — TRUE
-    iff EVERY sample's coded size ≤ the bound.  The per-MB I_PCM
-    fallback guarantees this statically for the i16/intra encoders, so
-    a FULL SQL oracle can assert the column as a literal TRUE and a
-    CAVLC rate regression flips the driver hash."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from real_time_trip_processing_project_spark.operators import (
-            h264 as H,
-        )
-
-        for pdf in batches:
-            mids, counts, ws, hs, oks, cons, pxs = [], [], [], [], [], [], []
-            bounded: list[bool] = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                pb = bytes(payload)
-                try:
-                    info = H.parse_mp4(pb)
-                except ValueError:
-                    mids.append(mid)
-                    counts.append(0)
-                    ws.append(0)
-                    hs.append(0)
-                    oks.append(0)
-                    cons.append(False)
-                    pxs.append(0)
-                    bounded.append(False)
-                    continue
-                consistent = info["index_consistent"] and (
-                    info["width"] == info["sps"]["width"]
-                    and info["height"] == info["sps"]["height"]
-                )
-                ls = info["length_size"]
-                ok = 0
-                for off, size in info["samples"]:
-                    if size >= ls + 1:
-                        ln = int.from_bytes(pb[off : off + ls], "big")
-                        nal0 = pb[off + ls] if ln >= 1 else 0
-                        if nal0 & 0x1F == 5:
-                            ok += 1
-                mids.append(mid)
-                counts.append(len(info["samples"]))
-                ws.append(info["width"])
-                hs.append(info["height"])
-                oks.append(ok)
-                cons.append(bool(consistent))
-                pxs.append(
-                    len(info["samples"]) * info["width"] * info["height"]
-                )
-                bounded.append(
-                    rate_bound_bytes is None
-                    or all(
-                        sz <= rate_bound_bytes
-                        for _off, sz in info["samples"]
-                    )
-                )
-            out = {
-                "media_id": mids,
-                "frame_count": counts,
-                "width": ws,
-                "height": hs,
-                "idr_ok_frames": oks,
-                "index_consistent": cons,
-                "px_count": pxs,
-            }
-            if rate_bound_bytes is not None:
-                out["within_rate_bound"] = bounded
-            yield pd.DataFrame(out)
-
-    schema = (
-        "media_id long, frame_count long, width long, height long, "
-        "idr_ok_frames long, index_consistent boolean, px_count long"
-    )
-    if rate_bound_bytes is not None:
-        schema += ", within_rate_bound boolean"
-    return media.mapInPandas(run, schema)
-
-
-def mp4_gop_index(
-    docs: DataFrame,
-    qp: int = 12,
-    search_range: int = 4,
-    codec: str = "i16p",
-    count_b: bool = False,
-) -> DataFrame:
-    """Container index of the GOP tiers (h264_inter.py P chains;
-    h264_b.py B GOPs): encode each doc's text frames as IDR + P (+ B)
-    with a real stss sync table, walk the container back, and emit the
-    text-derivable invariants a correct GOP must satisfy — frame
-    count, dims, exactly ONE IDR NAL (sample 0), sync table = [0],
-    stsc×stco×stsz consistency (ctts run-length total included, for
-    the B tier) and pixel count.  All integer-deterministic, so the
-    registered queries carry FULL SQL oracles (the GOP twin of
-    :func:`mp4_container_index`'s role for the all-IDR tiers).
-
-    ``count_b`` (codec="i16pb"): appends ``b_frames`` — samples whose
-    ctts composition offset is 0, i.e. the non-reference B pictures
-    that display one tick before their decode slot.  The IBP ladder
-    makes it exactly ``(frame_count-1)//2``, so the oracle derives it
-    from text length alone and any reorder/ctts defect flips the
-    driver hash.  Arrow-batched ``mapInPandas``; row-local."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from real_time_trip_processing_project_spark.operators import (
-            h264 as H,
-        )
-
-        frame_bytes = MP4_W * MP4_H
-        for pdf in batches:
-            out = {
-                "media_id": [], "frame_count": [], "width": [],
-                "height": [], "idr_frames": [], "sync_count": [],
-                "first_sync": [], "index_consistent": [], "px_count": [],
-            }
-            if count_b:
-                out["b_frames"] = []
-            for mid, t in zip(pdf["doc_id"], pdf["text"]):
-                px = _text_frames(t, frame_bytes)
-                frames = px.reshape(-1, MP4_H, MP4_W)
-                payload = H.encode_mp4_h264(
-                    frames, codec=codec, qp=qp, search_range=search_range
-                )
-                try:
-                    info = H.parse_mp4(payload)
-                except ValueError:
-                    info = None
-                out["media_id"].append(mid)
-                if info is None:
-                    for k in ("frame_count", "width", "height",
-                              "idr_frames", "sync_count", "px_count"):
-                        out[k].append(0)
-                    out["first_sync"].append(-1)
-                    out["index_consistent"].append(False)
-                    if count_b:
-                        out["b_frames"].append(0)
-                    continue
-                ls = info["length_size"]
-                idr = 0
-                for off, size in info["samples"]:
-                    if size >= ls + 1:
-                        nal0 = payload[off + ls]
-                        if nal0 & 0x1F == 5:
-                            idr += 1
-                sync = info["sync_samples"]
-                out["frame_count"].append(len(info["samples"]))
-                out["width"].append(info["width"])
-                out["height"].append(info["height"])
-                out["idr_frames"].append(idr)
-                out["sync_count"].append(len(sync))
-                out["first_sync"].append(sync[0] if sync else -1)
-                out["index_consistent"].append(
-                    bool(
-                        info["index_consistent"]
-                        and info["width"] == info["sps"]["width"]
-                        and info["height"] == info["sps"]["height"]
-                    )
-                )
-                out["px_count"].append(
-                    len(info["samples"]) * info["width"] * info["height"]
-                )
-                if count_b:
-                    offs = info["ctts_offsets"] or []
-                    out["b_frames"].append(
-                        sum(1 for o in offs if o == 0)
-                    )
-            yield pd.DataFrame(out)
-
-    from real_time_trip_processing_project_spark.sources.readers import (
-        spread_small_input,
-    )
-
-    schema = (
-        "media_id long, frame_count long, width long, height long, "
-        "idr_frames long, sync_count long, first_sync long, "
-        "index_consistent boolean, px_count long"
-    )
-    if count_b:
-        schema += ", b_frames long"
-    return spread_small_input(docs.select("doc_id", "text")).mapInPandas(
-        run, schema
-    )
-
-
-def mp4_frame_features(media: DataFrame, every_nth: int = 1) -> DataFrame:
-    """Decode MP4/H.264 payloads and emit per-frame pixel statistics.
-    Every sample is a self-contained IDR, so sampling skips unsampled
-    frames by TABLE lookup (stsz/stco arithmetic) — no decode cost for
-    skipped frames.  I_PCM decode is lossless, so px_sum/px_max are
-    exact integers and the consumer query carries a FULL SQL oracle —
-    the first compressed-container VIDEO path in the repo whose pixel
-    values hash-verify cross-engine."""
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from real_time_trip_processing_project_spark.operators import (
-            h264 as H,
-        )
-
-        for pdf in batches:
-            mids, idxs, sums, maxs = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _sps, frames = H.decode_mp4_h264(bytes(payload), every_nth)
-                for i, frame in frames:
-                    a = frame.astype(np.int64)
-                    mids.append(mid)
-                    idxs.append(i)
-                    sums.append(int(a.sum()))
-                    maxs.append(int(a.max()))
-            yield pd.DataFrame(
-                {
-                    "media_id": mids,
-                    "frame_idx": idxs,
-                    "px_sum": sums,
-                    "px_max": maxs,
-                }
-            )
-
-    return media.mapInPandas(
-        run, "media_id long, frame_idx long, px_sum long, px_max long"
-    )
-
-
-def mp4_i16_frame_stats(
-    docs: DataFrame,
-    width: int = MP4_W,
-    height: int = MP4_H,
-    qp: int = 12,
-    codec: str = "i16",
-) -> DataFrame:
-    """PREDICTED-macroblock video tier end-to-end (r10): the same
-    deterministic text→frames pixels as :func:`media_mp4_from_documents`
-    encoded as **Intra_16x16 + CAVLC** at ``qp`` (operators/
-    h264_intra.py — real spatial prediction, 4x4 integer transform +
-    DC Hadamard, spec quant, CAVLC entropy coding), containered as MP4,
-    then DECODED back through the full parse path; emits per-frame
-    distortion stats vs the source pixels plus the compressed size.
-
-    ``codec`` selects the slice encoder: ``"i16"`` (pure Intra_16x16,
-    the default the i16 query's floors are pinned to), ``"intra"``
-    (per-MB Intra_4x4/I16/PCM mode decision — the full-baseline-intra
-    query's path) or ``"i16_cabac"`` (the same I16 analysis under the
-    arithmetic entropy coder, h264_cabac.py — identical distortion
-    stats by construction, different rate).  Lossy by quantizer (unlike the I_PCM twin), so the
-    registered queries are rows-only with bench floors on mean/max
-    pixel error and the PCM-bound sample size — the MJPEG discipline.  The whole pipeline is INTEGER-deterministic (no float
-    DCT), so the stats themselves are stable across runs/machines and
-    golden-pinned in tests.  Arrow-batched ``mapInPandas``; row-local,
-    nothing shuffles at any scale."""
-    import numpy as np
-
-    frame_bytes = width * height
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from real_time_trip_processing_project_spark.operators import (
-            h264 as H,
-        )
-
-        for pdf in batches:
-            mids, idxs, sads, mxs, nals, szs, pxs = (
-                [], [], [], [], [], [], [],
-            )
-            for mid, t in zip(pdf["doc_id"], pdf["text"]):
-                px = _text_frames(t, frame_bytes)
-                src = px.reshape(-1, height, width)
-                payload = H.encode_mp4_h264(src, codec=codec, qp=qp)
-                info = H.parse_mp4(payload)
-                sample_sizes = [sz for _off, sz in info["samples"]]
-                _sps, decoded = H.decode_mp4_h264(payload)
-                for i, frame in decoded:
-                    err = np.abs(
-                        frame.astype(np.int64) - src[i].astype(np.int64)
-                    )
-                    mids.append(mid)
-                    idxs.append(i)
-                    sads.append(int(err.sum()))
-                    mxs.append(int(err.max()))
-                    # per-FRAME coded size (length-prefixed NAL sample)
-                    # — the rate figure; mp4_bytes is the whole-file
-                    # size repeated per row (container amortization)
-                    nals.append(int(sample_sizes[i]))
-                    szs.append(len(payload))
-                    pxs.append(frame_bytes)
-            yield pd.DataFrame(
-                {
-                    "media_id": mids,
-                    "frame_idx": idxs,
-                    "sum_abs_err": sads,
-                    "max_abs_err": mxs,
-                    "sample_bytes": nals,
-                    "mp4_bytes": szs,
-                    "px_count": pxs,
-                }
-            )
-
-    from real_time_trip_processing_project_spark.sources.readers import (
-        spread_small_input,
-    )
-
-    return spread_small_input(docs.select("doc_id", "text")).mapInPandas(
-        run,
-        "media_id long, frame_idx long, sum_abs_err long, "
-        "max_abs_err long, sample_bytes long, mp4_bytes long, "
-        "px_count long",
     )

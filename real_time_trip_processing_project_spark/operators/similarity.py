@@ -2505,13 +2505,18 @@ def hard_negatives_ann(
         return emb.sparkSession.createDataFrame(
             [], _hard_neg_schema(emb, id_col, label_col)
         )
-    # Per-query probed-cell sets, computed driver-side with EXACTLY the
+    # Per-query probed-cell sets, computed driver-side with the same
     # numpy ops _assign_udf applies executor-side (same normalize, same
-    # gemm, same argsort over the same raw-f64 values → identical probe
-    # sets), folded into a boolean (query × cell) LUT the scorer masks
-    # with — the ivfpq cell-LUT idiom.  The probe JOIN disappears: the
-    # gemm scores every (query, row) pair anyway, so probing is a mask,
-    # not data movement.
+    # gemm, same argsort over raw-f64 values), folded into a boolean
+    # (query × cell) LUT the scorer masks with — the ivfpq cell-LUT
+    # idiom.  The probe JOIN disappears: the gemm scores every
+    # (query, row) pair anyway, so probing is a mask, not data movement.
+    # The sets are not guaranteed identical to an executor-side
+    # assignment: this runs one gemm over the whole query matrix, the
+    # executor one per Arrow batch, and BLAS blocking can reorder
+    # near-tie centroid scores between the two and so change a probe
+    # set.  That moves ANN recall (floored in bench.py), never a
+    # returned distance: every d2 is the exact int64 tick distance.
     Cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
     X = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
     probe_order = np.argsort(-(X @ Cn.T), axis=1)[:, :n_probes]

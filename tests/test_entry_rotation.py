@@ -272,9 +272,10 @@ def test_registry_fits_the_freshness_budget():
     with N registered queries and a W-slot window, steady-state
     freshness is ⌈N/W⌉ rounds — it must not exceed _MAX_STALENESS + 1,
     or the overdue tier saturates permanently and every registration
-    starves someone.  At 199/50 the budget is exactly met; adding a
-    query without retiring one fails here first (retire to
-    plans/catalog.RETIRED — retirees stay locally oracle-tested)."""
+    starves someone.  At 187/50 the budget holds with 13 queries to
+    spare; past 200, adding a query without retiring one fails here
+    (retire to plans/catalog.RETIRED — retirees stay locally
+    oracle-tested)."""
     import math
 
     n = len(entry_mod.queries())

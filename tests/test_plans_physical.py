@@ -81,17 +81,19 @@ def test_wholestage_codegen_in_hot_paths(spark):
 
 def test_no_cartesian_products_in_catalogue(spark):
     """Nothing in the catalogue may fall back to an unintended cartesian
-    product.  The exact-pair similarity ops use an inequality self-join by
-    design (bounded fixture corpus; ANN is the scale path) — everything
-    else must be key-joined."""
+    product or nested-loop join.  The exact-pair similarity ops use an
+    inequality self-join by design (bounded fixture corpus; ANN is the
+    scale path) — everything else must be key-joined.  Every allowlist
+    entry must still plan a nested-loop join: a listed query that no
+    longer needs one is stale and fails here, so the list cannot hide a
+    regression."""
     # sim_cosine_topk: bounded query-set × corpus scan by design;
-    # text_lm_score / text_bm25_search: single-ROW broadcast of corpus
-    # scalars (token total; N + avgdl) — the no-driver-collect way to
-    # attach a global scalar; the BNLJ build side is one row at any
-    # corpus size.
+    # text_bigram_lm_score / text_bm25_search: single-ROW broadcast of
+    # corpus scalars (token total; N + avgdl) — the no-driver-collect
+    # way to attach a global scalar; the BNLJ build side is one row at
+    # any corpus size.
     allowed = {
         "sim_cosine_topk",
-        "text_lm_score",
         "text_bigram_lm_score",  # same 1-row corpus-total broadcast
         "text_bm25_search",
         "embedding_covariance",  # 1-row broadcast of the corpus count
@@ -106,9 +108,6 @@ def test_no_cartesian_products_in_catalogue(spark):
         "tpch_q11_important_stock",
         "tpch_q16_parts_supplier_relationship",
         "tpch_q20_potential_promotion",
-        # bounded-query-set × corpus scan by design (sim_cosine_topk
-        # class; label-filtered ANN is the serving path at scale)
-        "embedding_hard_negatives",
         # 1-row broadcast of the (T, S) feature-total scalar
         "curation_importance_resample",
         "curation_dsir_pipeline",  # same scalar via _dsir_pool_scores
@@ -118,12 +117,14 @@ def test_no_cartesian_products_in_catalogue(spark):
         "approx_sketch_bounds",
         "sim_ann_recall_bounds",
     }
+    assert allowed <= set(REGISTRY), allowed - set(REGISTRY)
     for name in REGISTRY:
-        if name in allowed:
-            continue
         plan = _plan(spark, name)
         assert "CartesianProduct" not in plan, name
-        assert "BroadcastNestedLoopJoin" not in plan, name
+        if name in allowed:
+            assert "BroadcastNestedLoopJoin" in plan, f"stale entry {name}"
+        else:
+            assert "BroadcastNestedLoopJoin" not in plan, name
 
 
 def test_triangle_joins_pin_both_size_regimes(spark, monkeypatch):

@@ -453,29 +453,34 @@ def test_pipeline_checkpoint_resume_no_reprocess(spark, tmp_path):
     """Exactly-once bookkeeping across process restarts: drain wave 1,
     STOP, land wave 2 in the same source dirs, start a NEW pipeline on
     the SAME checkpoint — the store must contain each trip exactly once
-    per status (wave 1 not reprocessed, wave 2 fully processed)."""
-    import os
-
-    from real_time_trip_processing_project_spark.sources import producer
-    from real_time_trip_processing_project_spark.streaming import jobs
-
-    ref = "/root/reference/data"
+    per status (wave 1 not reprocessed, wave 2 fully processed).  Trips
+    span the restart both ways: 0–9 start in wave 1 and end in wave 2,
+    25–34 end in wave 1 and start in wave 2."""
     sdir, edir = str(tmp_path / "s"), str(tmp_path / "e")
     store, orph, ckpt = (
         str(tmp_path / "store"),
         str(tmp_path / "orph"),
         str(tmp_path / "ckpt"),
     )
-    starts = producer._rows_from_csv(f"{ref}/trip_start.csv")[:50]
-    ends = producer._rows_from_csv(f"{ref}/trip_end.csv")[:50]
-    producer.write_stream_files(starts[:25], sdir, prefix="w0")
-    producer.write_stream_files(ends[:25], edir, prefix="w0")
+    w0_ends = range(10, 35)
+    producer.write_stream_files(
+        [_start_event(i) for i in range(25)], sdir, prefix="w0"
+    )
+    producer.write_stream_files(
+        [_end_event(i) for i in w0_ends], edir, prefix="w0"
+    )
     jobs.run_pipeline_to_completion(
         spark, sdir, edir, store, orph, ckpt, key_groups=4
     )
     n_after_w0 = spark.read.parquet(store).count()
-    producer.write_stream_files(starts[25:], sdir, prefix="w1")
-    producer.write_stream_files(ends[25:], edir, prefix="w1")
+    producer.write_stream_files(
+        [_start_event(i) for i in range(25, 50)], sdir, prefix="w1"
+    )
+    producer.write_stream_files(
+        [_end_event(i) for i in range(50) if i not in w0_ends],
+        edir,
+        prefix="w1",
+    )
     jobs.run_pipeline_to_completion(
         spark, sdir, edir, store, orph, ckpt, key_groups=4
     )
